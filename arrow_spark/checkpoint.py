@@ -1,19 +1,19 @@
 """Loop-safe checkpointing for iterative relational operators.
 
-`ckpt_reset_stats` is THE checkpoint primitive for loop-carried DataFrame
-state (connected components, pagerank, label propagation, k-core/k-truss
-peeling, Bellman-Ford relaxation). A bare ``localCheckpoint`` truncates
-*lineage* but PRESERVES the origin plan's estimated *statistics* on the
-resulting LogicalRDD — and in a loop whose round contains a join, those
-estimates compound multiplicatively round-over-round (Catalyst's
+Every loop-carried DataFrame (connected components, pagerank, label
+propagation, k-core/k-truss peeling, Bellman-Ford relaxation) runs
+through ``iterate``, which checkpoints each generation with
+``ckpt_reset_stats``. A bare ``localCheckpoint`` truncates *lineage* but
+PRESERVES the origin plan's estimated *statistics* on the resulting
+LogicalRDD — and in a loop whose round contains a join, those estimates
+compound multiplicatively round-over-round (Catalyst's
 ``SizeInBytesOnlyStatsPlanVisitor.visitJoin`` multiplies child estimates)
 until ``java.math.BigInteger`` itself overflows at ~2^31 bits:
 
     ArithmeticException: BigInteger would overflow supported range
 
-raised during PLANNING, before any task runs. Proven empirically in the
-round-12 second-decade sweep: the connected-components loop at gen-sf3
-(76,814-doc template chain) died at round ~25 with exactly this error.
+raised during PLANNING, before any task runs. The connected-components
+loop hit exactly this at round ~25 on a 76,814-document template chain.
 
 The fix: rebuild the Dataset over the checkpointed RDD. The rebuilt frame
 drops the origin stats and reports ``defaultSizeInBytes``
@@ -22,11 +22,6 @@ never be elected a broadcast build side — the conservative direction for
 loop-carried state at 100 TB (you never want the planner silently
 broadcasting a frame whose size is loop-dependent).
 
-Discovered and first applied in ``llm/dedup.connected_components`` (r12);
-hoisted here in r13 so every iterative operator shares one audited
-implementation (the six graph operators ran bare ``localCheckpoint`` in
-the identical join-in-loop shape — VERDICT r12 "What's wrong #1").
-
 Reference anchor: the reference engine has no iteration node at all
 (cpp/src/arrow/acero/exec_plan.cc — plans are DAGs); loops are a
 Spark-native extension, so this hazard has no reference analog.
@@ -34,91 +29,27 @@ Spark-native extension, so this hazard has no reference analog.
 
 from __future__ import annotations
 
+from typing import Callable, Iterable, Sequence
+
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
-__all__ = ["ckpt_reset_stats", "ckpt_release"]
+__all__ = ["ckpt_reset_stats", "ckpt_release", "iterate"]
 
 
-def ckpt_reset_stats(
-    df: DataFrame,
-    release: DataFrame | None = None,
-    storage_level: StorageLevel | None = None,
-    eager: bool = True,
-) -> DataFrame:
-    """localCheckpoint + statistics reset — REQUIRED for iterative join
-    loops (use this, not bare localCheckpoint, for loop-carried state).
+def _local_checkpoint(df: DataFrame, eager: bool) -> DataFrame:
+    """localCheckpoint at the serialized memory+disk level, rebuilt over
+    the checkpointed RDD so the origin statistics are dropped.
 
-    Spark's localCheckpoint preserves the ORIGIN plan's estimated
-    statistics on the resulting LogicalRDD (verified on 4.1: a join
-    estimated at 64 MB checkpoints to a frame still claiming 64 MB —
-    the checkpoint does NOT reset to measured size). In a loop whose
-    round contains a join, the size estimates therefore COMPOUND
-    multiplicatively across rounds (visitJoin multiplies child
-    estimates) until java.math.BigInteger itself overflows at ~2^31
-    bits: 'ArithmeticException: BigInteger would overflow supported
-    range' raised from SizeInBytesOnlyStatsPlanVisitor during PLANNING,
-    before any task runs — hit by the CC loop at gen-sf3 around round
-    25 (r12 second-decade sweep). Rebuilding the Dataset over the
-    checkpointed RDD drops the origin stats: the frame then reports
-    defaultSizeInBytes (Long.MaxValue), which (a) stays bounded
-    round-over-round and (b) can never be elected a broadcast build
-    side — the conservative direction for loop-carried state.
-
-    Implementation note: the rebuild goes through two PRIVATE JVM-side
-    APIs (``SparkSession.internalCreateDataFrame`` and
+    The rebuild goes through two PRIVATE JVM-side APIs
+    (``SparkSession.internalCreateDataFrame`` and
     ``QueryExecution.toRdd``), verified working on PySpark 4.1. They do
     not exist under Spark Connect and could change across Spark
-    upgrades, so incompatibility fails LOUDLY here — at the helper, with
-    a message naming the contract — rather than deep inside an iterative
-    loop as an opaque Py4J error (ADVICE r12).
-
-    Memory contract (r13, found at E=30M connected components): each
-    call persists ONE new RDD generation. Spark's default
-    ``localCheckpoint`` level is MEMORY_AND_DISK **deserialized**, and
-    nothing ever unpersists old generations — a loop therefore
-    accumulates rounds × |state| of deserialized on-heap blocks, and
-    the unroll of a new generation across every executor thread at once
-    is exactly where the 30M-edge CC sweep OOM'd the 16 GB local JVM
-    (``MemoryStore.putIteratorAsValues`` in the traceback; Spark's
-    ContextCleaner only reclaims dropped generations on driver-GC
-    cadence, far behind executor heap pressure). Two fixes, both
-    defaults here: generations persist SERIALIZED
-    (``StorageLevel.MEMORY_AND_DISK``; pass ``storage_level`` to
-    override), and passing the PREVIOUS generation's frame as
-    ``release`` unpersists it as soon as the new generation has
-    materialized — the loop then holds exactly one serialized copy of
-    its state. In-loop shape::
-
-        state = ckpt_reset_stats(seed)
-        for _ in range(rounds):
-            state = ckpt_reset_stats(step(state), release=state)
-
-    The final generation stays persisted (the returned frame reads it);
-    call ``ckpt_release`` on the result when the consumer is done.
-
-    ``eager=False`` (r14) defers materialization: the checkpoint RDD is
-    only MARKED for local checkpointing, and the caller's FIRST action on
-    the returned frame (typically a convergence ``count()``) computes and
-    persists it — folding what used to be two Spark actions per loop
-    round (eager checkpoint + count) into one. Two caller obligations in
-    lazy mode, both enforced here: ``release`` is forbidden (unpersisting
-    the predecessor before the new generation materializes would free
-    blocks its computation still reads — localCheckpoint truncates
-    lineage, so those blocks are unrecoverable), and the caller must run
-    exactly one materializing action before releasing the predecessor
-    itself.
-    """
-    if not eager and release is not None:
-        raise ValueError(
-            "ckpt_reset_stats(eager=False) cannot release the previous "
-            "generation: the new one has not materialized yet and its "
-            "computation still reads the predecessor's checkpoint blocks. "
-            "Materialize (count/action) first, then ckpt_release(prev)."
-        )
-    ck = df.localCheckpoint(
-        eager=eager, storageLevel=storage_level or StorageLevel.MEMORY_AND_DISK
-    )
+    upgrades, so incompatibility fails LOUDLY here — with a message
+    naming the contract — rather than deep inside an iterative loop as
+    an opaque Py4J error."""
+    ck = df.localCheckpoint(eager=eager, storageLevel=StorageLevel.MEMORY_AND_DISK)
     spark = ck.sparkSession
     if not hasattr(spark, "_jsparkSession"):
         raise RuntimeError(
@@ -147,6 +78,27 @@ def ckpt_reset_stats(
     # handle for ckpt_release: the checkpoint Dataset whose analyzed plan
     # (a LogicalRDD) owns the persisted RDD generation
     out._ckpt_src = ck
+    return out
+
+
+def ckpt_reset_stats(df: DataFrame, release: DataFrame | None = None) -> DataFrame:
+    """Eager localCheckpoint + statistics reset — use this, not bare
+    localCheckpoint, for any frame that re-enters joins (see the module
+    docstring for the compounding hazard).
+
+    Memory contract: each call persists ONE new RDD generation, stored
+    SERIALIZED (``StorageLevel.MEMORY_AND_DISK``). Spark's default
+    ``localCheckpoint`` level is deserialized, and its unroll across
+    every executor thread at once is where a 30M-edge connected-
+    components run OOM'd a 16 GB local JVM
+    (``MemoryStore.putIteratorAsValues``); Spark's ContextCleaner only
+    reclaims dropped generations on driver-GC cadence. Passing the
+    previous generation as ``release`` unpersists it once the new one
+    has materialized. The returned frame reads its generation; call
+    ``ckpt_release`` on it when the consumer is done. Loops should use
+    ``iterate``, which owns that bookkeeping.
+    """
+    out = _local_checkpoint(df, eager=True)
     if release is not None:
         ckpt_release(release)
     return out
@@ -174,3 +126,75 @@ def ckpt_release(frame: DataFrame) -> bool:
         ) from exc
     frame._ckpt_src = None
     return True
+
+
+def _differs(a: DataFrame, b: DataFrame, cols: list[str]) -> bool:
+    """Two-sided set inequality: rows in exactly one of {a, b}. One-sided
+    "no new rows" is insufficient — a round may strictly shrink the set."""
+    one = F.lit(1).alias("one")
+    return (
+        a.join(b, cols, "left_anti").select(one)
+        .union(b.join(a, cols, "left_anti").select(one))
+        .count()
+        > 0
+    )
+
+
+def iterate(
+    state: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    rounds: int,
+    *,
+    invariants: Iterable[DataFrame] = (),
+    fixpoint: Sequence[str] | None = None,
+) -> DataFrame:
+    """Run ``state = step(state)`` as a checkpointed loop; return the
+    final generation, which stays persisted (the returned frame reads
+    it — ``ckpt_release`` it when the consumer is done).
+
+    Fixed-round mode (``fixpoint=None``) runs exactly ``rounds`` steps.
+    Each round checkpoints eagerly (``ckpt_reset_stats``) and then
+    releases its predecessor, so the loop holds one generation at a
+    time. ``state`` itself is never checkpointed here: pass a projection
+    over an invariant to let round 1 materialize it, or a checkpoint the
+    caller built (it is released like any other generation).
+
+    Fixpoint mode (``fixpoint=cols``) stops at the first round whose
+    output equals its predecessor's as a set over ``cols``, and raises
+    ``RuntimeError`` if ``rounds`` (the cap) pass without that. Each
+    round checkpoints LAZILY and its ``count()`` is the materializing
+    action, so the convergence count is the round's only job while the
+    cardinalities differ; the two-sided anti-join check runs only when
+    two consecutive counts agree. The predecessor is released after the
+    count, because the new generation's computation reads its blocks
+    until then.
+
+    On every exit — normal, non-convergence or an exception raised by
+    ``step`` or Spark — the ``invariants`` (checkpoints the step reads,
+    e.g. an edge frame) and every generation except the returned one
+    are released."""
+    new = None
+    try:
+        prev_n = None
+        for _ in range(rounds):
+            new = _local_checkpoint(step(state), eager=fixpoint is None)
+            done = False
+            if fixpoint is not None:
+                n = new.count()
+                done = n == prev_n and not _differs(new, state, list(fixpoint))
+                prev_n = n
+            ckpt_release(state)
+            state, new = new, None
+            if done:
+                return state
+        if fixpoint is not None:
+            raise RuntimeError(f"iterate: no fixpoint within the round cap of {rounds}")
+        return state
+    except BaseException:
+        ckpt_release(state)
+        if new is not None:
+            ckpt_release(new)
+        raise
+    finally:
+        for frame in invariants:
+            ckpt_release(frame)

@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
-from ..checkpoint import ckpt_release, ckpt_reset_stats
+from ..checkpoint import ckpt_release, ckpt_reset_stats, iterate
 
 
 def normalize_text(col):
@@ -685,12 +685,6 @@ def embedding_near_dup_pairs(
     return out
 
 
-# ckpt_reset_stats moved to arrow_spark/checkpoint.py in r13 so the six
-# graph operators (pagerank/labelprop/kcore/ktruss/shortest_paths/
-# triangles) can share the one audited implementation; re-exported here
-# because every r12-era caller and test imports it from this module.
-
-
 def connected_components(
     edges: DataFrame,
     src: str = "id_a",
@@ -728,32 +722,21 @@ def connected_components(
     paper's monotonicity lemma), so peak state is the input edge list;
     each round is two map-side-combinable min-aggregations + two
     equi-joins + one dedupe, all keyed on vertex ids — broadcast-free.
-    Checkpoints go through ckpt_reset_stats, NOT bare localCheckpoint
-    (preserved origin-size estimates compound to BigInteger overflow in
-    join-bearing loops — see arrow_spark/checkpoint.py), and every
-    generation is released as soon as its successor materializes; the
-    returned frame is itself checkpointed so exactly ONE node-scale
-    generation outlives the call. No .cache() anywhere: checkpoint
-    blocks don't enter the CacheManager, so later unrelated queries
-    can't pick them up via ReusedExchange (SCALE.md round-1 lesson).
+    The loop runs through ``checkpoint.iterate`` in fixpoint mode (lazy
+    checkpoint, count as the round's materializing action, round cap
+    ``max_iter`` raising RuntimeError); the returned frame is itself
+    checkpointed so exactly ONE node-scale generation outlives the
+    call. No .cache() anywhere: checkpoint blocks don't enter the
+    CacheManager, so later unrelated queries can't pick them up via
+    ReusedExchange (SCALE.md round-1 lesson).
     """
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     # one materialization of the pair-generation lineage; vertices
     # (self-loop-only ones included) and the canonical simple edges
     # both derive from it
     ec = ckpt_reset_stats(e)
-    # round 0 consumes the raw frame directly (canonicalization inlined,
-    # no up-front distinct — the min-aggregations are duplicate-blind
-    # and the round's final dedupe canonicalizes): one fewer eager
-    # materialization. The fixpoint check starts at round 1, comparing
-    # consecutive ROUND OUTPUTS, so correctness is untouched.
-    cur = ec.where(F.col("u") != F.col("v")).select(
-        F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
-    )
-    prev = None
-    prev_count = -1
-    converged = False
-    for _ in range(max_iter):
+
+    def _star_round(cur: DataFrame) -> DataFrame:
         # large-star: around every center c, point each LARGER neighbor
         # n at m = min(closed neighborhood of c)
         sym = cur.select(F.col("u").alias("c"), F.col("v").alias("n")).union(
@@ -773,7 +756,7 @@ def connected_components(
             F.greatest("u", "v").alias("c"), F.least("u", "v").alias("n")
         )
         m2 = can.groupBy("c").agg(F.min("n").alias("m"))
-        ss = (
+        return (
             can.join(m2, "c")
             .select(F.col("n").alias("a"), F.col("m").alias("b"))
             .union(m2.select(F.col("c").alias("a"), F.col("m").alias("b")))
@@ -781,71 +764,45 @@ def connected_components(
             .select(F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v"))
             .distinct()
         )
-        # LAZY checkpoint + count-as-materializer (r14): the convergence
-        # count below is the round's ONE action — it computes the round,
-        # persists the generation, and returns the cardinality, where the
-        # r13 shape paid two actions (eager checkpoint, then a count over
-        # the persisted blocks). prev's generation is released only AFTER
-        # the count materializes new (lazy mode forbids `release=`: new's
-        # computation still reads prev's checkpoint blocks).
-        new = ckpt_reset_stats(ss, eager=False)
-        n_new = new.count()
-        # convergence = two-sided set equality of consecutive ROUND
-        # OUTPUTS (round 0 has no materialized predecessor to compare).
-        # Cheap sound filter first: different cardinalities can never be
-        # equal sets — prev's count is carried in a Python variable
-        # (ADVICE r13: it was re-counted every round), so the
-        # two-anti-join check — rows in exactly one of {new, prev} — only
-        # runs in the final round or two when counts have stabilized.
-        changed = 1
-        if prev is not None and n_new == prev_count:
-            changed = (
-                new.join(prev, ["u", "v"], "left_anti")
-                .select(F.lit(1).alias("one"))
-                .union(
-                    prev.join(new, ["u", "v"], "left_anti").select(
-                        F.lit(1).alias("one")
-                    )
-                )
-                .count()
+
+    cur = None
+    try:
+        # round 0 consumes the raw frame directly (canonicalization
+        # inlined, no up-front distinct — the min-aggregations are
+        # duplicate-blind and the round's final dedupe canonicalizes);
+        # the fixpoint check compares consecutive ROUND OUTPUTS
+        cur = iterate(
+            ec.where(F.col("u") != F.col("v")).select(
+                F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
+            ),
+            _star_round,
+            max_iter,
+            fixpoint=("u", "v"),
+        )
+        # fixpoint = star forest (child v → root u = component min); emit
+        # every vertex of the original edge list, singletons labelling
+        # themselves
+        comp = (
+            cur.select(F.col("v").alias("vtx"), F.col("u").alias("component"))
+            .union(cur.select(F.col("u").alias("vtx"), F.col("u").alias("component")))
+            .groupBy("vtx")
+            .agg(F.min("component").alias("component"))
+        )
+        verts = ec.select(F.col("u").alias("x")).union(
+            ec.select(F.col("v").alias("x"))
+        ).distinct()
+        out = ckpt_reset_stats(
+            verts.join(comp, verts.x == comp.vtx, "left").select(
+                F.col("x").alias("v"),
+                F.coalesce("component", F.col("x")).alias("component"),
             )
-        if prev is not None:
-            ckpt_release(prev)
-        prev = new
-        prev_count = n_new
-        cur = new
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        # release the live generations before raising (ADVICE r13: the
-        # error path leaked the persisted ec + final-round blocks)
+        )
+    finally:
+        # the output checkpoint reads ec and the final generation, so
+        # both outlive the loop
         ckpt_release(ec)
-        if prev is not None:
-            ckpt_release(prev)
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds"
-        )
-    # fixpoint = star forest (child v → root u = component min); emit
-    # every vertex of the original edge list, singletons labelling
-    # themselves
-    comp = (
-        cur.select(F.col("v").alias("vtx"), F.col("u").alias("component"))
-        .union(cur.select(F.col("u").alias("vtx"), F.col("u").alias("component")))
-        .groupBy("vtx")
-        .agg(F.min("component").alias("component"))
-    )
-    verts = ec.select(F.col("u").alias("x")).union(
-        ec.select(F.col("v").alias("x"))
-    ).distinct()
-    out = ckpt_reset_stats(
-        verts.join(comp, verts.x == comp.vtx, "left").select(
-            F.col("x").alias("v"),
-            F.coalesce("component", F.col("x")).alias("component"),
-        )
-    )
-    ckpt_release(ec)
-    ckpt_release(cur)
+        if cur is not None:
+            ckpt_release(cur)
     return out
 
 

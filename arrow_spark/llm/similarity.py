@@ -228,14 +228,6 @@ def dequantize(codes_col, params: list[tuple[float, float]]):
 # -- IVF (inverted-file) ANN -------------------------------------------------
 
 
-def _sq_l2(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
 def _nearest_centroids(vectors: DataFrame, cents, vec_col: str,
                        id_col: str, n_take: int) -> DataFrame:
     """Attach the n_take nearest centroid ids to each vector row.
@@ -284,56 +276,74 @@ def _nearest_centroids(vectors: DataFrame, cents, vec_col: str,
     return vectors.select("*", F.explode(top(F.col(vec_col))).alias("cid"))
 
 
-def _assign_mean_partials(vectors: DataFrame, cents, vec_col: str) -> DataFrame:
-    """Fused Lloyd E+M step (r14): one Arrow pass assigns every vector
-    to its nearest centroid (the exact `_nearest_centroids` d² matmul +
-    first-minimum argmin) AND reduces each batch to per-(cid, dim)
-    partial sums. Output is (cid, pos, cnt, psum) — k·dim rows per
-    Arrow batch — so the only shuffle a Lloyd iteration pays is over
-    O(k·dim·n_batches) partials with map-side combine, not the
-    corpus·dim posexplode of the r13 shape. At 100 TB that retires a
-    64-128× row-inflation shuffle per iteration; the assignment itself
-    never leaves the task."""
+def _assign_mean_partials(
+    vectors: DataFrame, cents: dict, vec_col: str, sub_col: str | None = None
+) -> DataFrame:
+    """Fused Lloyd E+M step: one Arrow pass assigns every vector to its
+    nearest centroid (the exact `_nearest_centroids` d² matmul +
+    first-minimum argmin) AND reduces each batch to per-(key, dim)
+    partial sums, so the only shuffle a Lloyd iteration pays is over
+    O(k·dim·n_batches) partials with map-side combine, not a corpus·dim
+    posexplode; the assignment itself never leaves the task.
+
+    ``cents`` maps centroid keys to vectors: ``(cid,)`` for one codebook
+    (IVF), or ``(s, cid)`` with ``sub_col`` naming the subspace column
+    when each row is assigned only against its own subspace's codebook
+    (PQ). Output is (cid, pos, cnt, psum), with ``sub_col`` in front
+    when given."""
     import numpy as np
     import pandas as pd
 
-    cent_rows = sorted(cents, key=lambda t: t[0])
-    cids = np.array([c for c, _ in cent_rows], dtype=np.int64)
-    cmat = np.asarray([cv for _, cv in cent_rows], dtype=np.float64)  # k × dim
-    c_sq = (cmat * cmat).sum(axis=1)
-    k, dim = cmat.shape
+    books: dict[tuple, list] = {}
+    for key, cv in sorted(cents.items()):
+        books.setdefault(key[:-1], []).append((key[-1], cv))
+    mats = {}
+    for sub, rows in books.items():
+        cmat = np.asarray([cv for _, cv in rows], dtype=np.float64)  # k × dim
+        ids = np.array([cid for cid, _ in rows], dtype=np.int64)
+        mats[sub] = (ids, cmat, (cmat * cmat).sum(axis=1))
 
     def _partials(it):
         for pdf in it:
             if len(pdf) == 0:
                 continue
-            v = np.vstack(pdf[vec_col].to_numpy())
-            d2 = (v * v).sum(axis=1)[:, None] - 2.0 * (v @ cmat.T) + c_sq[None, :]
-            ci = np.argmin(d2, axis=1)  # first minimum == stable-argsort head
-            sums = np.zeros((k, dim), dtype=np.float64)
-            np.add.at(sums, ci, v)  # unbuffered scatter-add, row order
-            cnts = np.bincount(ci, minlength=k)
-            present = np.flatnonzero(cnts)
-            yield pd.DataFrame(
-                {
-                    "cid": np.repeat(cids[present], dim),
-                    "pos": np.tile(np.arange(dim, dtype=np.int32), len(present)),
-                    "cnt": np.repeat(cnts[present], dim),
-                    "psum": sums[present].ravel(),
-                }
-            )
+            vecs = np.vstack(pdf[vec_col].to_numpy())
+            frames = []
+            for sub, (ids, cmat, c_sq) in mats.items():
+                v = vecs
+                if sub_col is not None:
+                    mask = (pdf[sub_col] == sub[0]).to_numpy()
+                    if not mask.any():
+                        continue
+                    v = vecs[mask]
+                k, dim = cmat.shape
+                d2 = (v * v).sum(axis=1)[:, None] - 2.0 * (v @ cmat.T) + c_sq[None, :]
+                ci = np.argmin(d2, axis=1)  # first minimum == stable-argsort head
+                sums = np.zeros((k, dim), dtype=np.float64)
+                np.add.at(sums, ci, v)  # unbuffered scatter-add, row order
+                cnts = np.bincount(ci, minlength=k)
+                present = np.flatnonzero(cnts)
+                cols = {}
+                if sub_col is not None:
+                    cols[sub_col] = np.full(len(present) * dim, sub[0], dtype=np.int32)
+                cols["cid"] = np.repeat(ids[present], dim)
+                cols["pos"] = np.tile(np.arange(dim, dtype=np.int32), len(present))
+                cols["cnt"] = np.repeat(cnts[present], dim)
+                cols["psum"] = sums[present].ravel()
+                frames.append(pd.DataFrame(cols))
+            if frames:
+                yield pd.concat(frames, ignore_index=True)
 
+    sub_schema = f"{sub_col} int, " if sub_col is not None else ""
     return vectors.mapInPandas(
-        _partials, "cid long, pos int, cnt long, psum double"
+        _partials, f"{sub_schema}cid long, pos int, cnt long, psum double"
     )
 
 
-def _mean_partials_from_assigned(
-    assigned: DataFrame, key_cols: list[str], vec_col: str
-) -> DataFrame:
-    """Per-batch (key..., pos, cnt, psum) partials over a frame that
-    already carries its cluster key(s) — the closing M-step over the
-    checkpointed final assignment (no re-assignment needed)."""
+def _mean_partials_from_assigned(assigned: DataFrame, vec_col: str) -> DataFrame:
+    """Per-batch (cid, pos, cnt, psum) partials over a frame that already
+    carries its ``cid`` — the closing M-step over the checkpointed final
+    assignment (no re-assignment needed)."""
     import numpy as np
     import pandas as pd
 
@@ -343,40 +353,39 @@ def _mean_partials_from_assigned(
                 continue
             v = np.vstack(pdf[vec_col].to_numpy())
             dim = v.shape[1]
-            keys = list(zip(*(pdf[kc] for kc in key_cols)))
-            uniq = sorted(set(keys))
-            idx = {key: j for j, key in enumerate(uniq)}
-            ki = np.array([idx[key] for key in keys], dtype=np.int64)
+            uniq, ki = np.unique(pdf["cid"].to_numpy(), return_inverse=True)
             sums = np.zeros((len(uniq), dim), dtype=np.float64)
             np.add.at(sums, ki, v)
-            cnts = np.bincount(ki, minlength=len(uniq))
-            cols = {
-                kc: np.repeat([key[j] for key in uniq], dim)
-                for j, kc in enumerate(key_cols)
-            }
-            cols["pos"] = np.tile(np.arange(dim, dtype=np.int32), len(uniq))
-            cols["cnt"] = np.repeat(cnts, dim)
-            cols["psum"] = sums.ravel()
-            yield pd.DataFrame(cols)
+            yield pd.DataFrame(
+                {
+                    "cid": np.repeat(uniq, dim),
+                    "pos": np.tile(np.arange(dim, dtype=np.int32), len(uniq)),
+                    "cnt": np.repeat(np.bincount(ki, minlength=len(uniq)), dim),
+                    "psum": sums.ravel(),
+                }
+            )
 
-    key_schema = ", ".join(f"{kc} long" for kc in key_cols)
-    return assigned.mapInPandas(
-        _partials, f"{key_schema}, pos int, cnt long, psum double"
+    return assigned.mapInPandas(_partials, "cid long, pos int, cnt long, psum double")
+
+
+def _lloyd_update(partials: DataFrame, keys: list[str], cents: dict) -> dict:
+    """Shared Lloyd M-step: the per-(key..., pos) mean
+    round(Σ psum / Σ cnt, 6) over (key..., pos, cnt, psum) partials,
+    reassembled driver-side (k·dim rows of index metadata) into
+    {key_tuple: [mean_0..mean_{dim-1}]}. The 6-decimal round absorbs
+    cross-partition float accumulation order, so runs are
+    bit-reproducible. Empty clusters keep their previous centroid."""
+    dims = partials.groupBy(*keys, "pos").agg(
+        F.round(F.sum("psum") / F.sum("cnt"), 6).alias("m")
     )
-
-
-def _assemble_means(rows, key_cols=None, key_len: int | None = None) -> dict:
-    """Driver-side reassembly of collected (key..., pos, m) mean rows
-    into {key_tuple: [mean_0..mean_{dim-1}]} (replaces the old
-    collect_list/array_sort Spark-side assembly — the rows are
-    k·dim index metadata)."""
-    n_key = key_len if key_len is not None else len(key_cols)
     by_key: dict = {}
-    for r in rows:
-        key = tuple(r[i] for i in range(n_key))
-        by_key.setdefault(key, []).append((r["pos"], r["m"]))
+    for r in dims.collect():
+        by_key.setdefault(tuple(r[i] for i in range(len(keys))), []).append(
+            (r["pos"], r["m"])
+        )
     return {
-        key: [mv for _, mv in sorted(pairs)] for key, pairs in by_key.items()
+        key: [mv for _, mv in sorted(by_key[key])] if key in by_key else cv
+        for key, cv in cents.items()
     }
 
 
@@ -434,63 +443,30 @@ def ivf_build_index(
     )
     # init = the n_clusters lowest ids. A k-row driver collect (k ≤ a few
     # hundred — index-build metadata, not data) assigns cid 0..k-1 by id
-    # order.
-    #
-    # r14: centroid state lives DRIVER-SIDE between iterations (the
-    # pinned_lloyd / exact-replay precedent — centroids are k rows of
-    # index metadata, not data). The r13 shape paid, per iteration, one
-    # k-row collect, one k×k join, and one eager checkpoint action; now
-    # the M-step's updated.collect() is the iteration's ONLY action and
-    # the Python dict merge replicates the old left-join + coalesce
-    # (empty clusters keep their previous centroid) exactly. The Spark-
-    # side arithmetic — assignment matmul, round(avg, 6) means — is
-    # byte-for-byte the same plan, so assignments and means are
-    # unchanged.
+    # order. Centroid state lives driver-side between iterations, so the
+    # M-step's collect is each iteration's only action.
     init_rows = (
         c.select("nid", "nv").orderBy("nid").limit(n_clusters).collect()
     )
-    cent_list = [(i, list(r["nv"])) for i, r in enumerate(init_rows)]
+    cents = {(i,): list(r["nv"]) for i, r in enumerate(init_rows)}
     indexed = None
     for i in range(n_iters):
         if i == n_iters - 1:
             # Materialize the final assignment once: the closing M-step
             # below AND every probe-time consumer read this checkpoint,
-            # so the corpus is assigned n_iters times total (previously
-            # n_iters + 1: ivf_topk re-ran _nearest_centroids over the
-            # whole corpus against the final centroids).
-            assigned = _nearest_centroids(c, cent_list, "nv", "nid", 1)
-            assigned = assigned.localCheckpoint(eager=True)
-            indexed = assigned
-            partials = _mean_partials_from_assigned(
-                assigned, ["cid"], "nv"
-            )
+            # so the corpus is assigned n_iters times total.
+            cent_list = [(cid, cv) for (cid,), cv in cents.items()]
+            indexed = _nearest_centroids(c, cent_list, "nv", "nid", 1)
+            indexed = indexed.localCheckpoint(eager=True)
+            partials = _mean_partials_from_assigned(indexed, "nv")
         else:
-            # FUSED E+M step (r14, guide §4/§2): the same Arrow pass
-            # that argmins each batch also emits per-batch partial sums
-            # (cid, pos, cnt, psum) — k·dim rows per batch instead of
-            # corpus·dim exploded rows through the shuffle. Assignment
-            # arithmetic is _nearest_centroids' byte-for-byte (same d²
-            # matmul, argmin == stable-argsort head); the mean becomes
-            # round(Σ psum / Σ cnt, 6) instead of round(avg(val), 6) —
-            # the same double-accumulation class whose ordering noise
-            # the 6-decimal round exists to absorb (the old avg already
-            # reassociated freely across AQE partial aggregates).
-            partials = _assign_mean_partials(c, cent_list, "nv")
-        dims = partials.groupBy("cid", "pos").agg(
-            F.round(F.sum("psum") / F.sum("cnt"), 6).alias("m")
-        )
-        new_cv = _assemble_means(dims.collect(), key_cols=("cid",))
-        # empty clusters keep their previous centroid (the old left
-        # join's coalesce)
-        cent_list = [(cid, new_cv.get((cid,), cv)) for cid, cv in cent_list]
+            partials = _assign_mean_partials(c, cents, "nv")
+        cents = _lloyd_update(partials, ["cid"], cents)
     # the final `indexed` checkpoint is what consumers read; the
     # training relation's generation is done
     ckpt_release(c)
-    spark = c.sparkSession
-    cents = spark.createDataFrame(
-        [(cid, cv) for cid, cv in cent_list], "cid int, cv array<double>"
-    )
-    return cents, indexed
+    rows = [(cid, cv) for (cid,), cv in cents.items()]
+    return c.sparkSession.createDataFrame(rows, "cid int, cv array<double>"), indexed
 
 
 def write_ivf_index(cents: DataFrame, indexed: DataFrame, path: str) -> None:
@@ -615,9 +591,6 @@ def pq_train_codebooks(
     Determinism mirrors ivf_build_index: lowest-id init, means rounded
     to 6 decimals, stable argmin tie-break toward the lower code.
     """
-    import numpy as np
-    import pandas as pd
-
     dim = len(corpus.select(vec_col).first()[0])
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m}")
@@ -642,12 +615,8 @@ def pq_train_codebooks(
     # exploded (nid, s, subvector) frame through mapInPandas
     sub = ckpt_reset_stats(sub)
 
-    # r14: codebook state lives DRIVER-SIDE between iterations (see
-    # ivf_build_index — the m·k codebook rows are index metadata). Each
-    # iteration's ONLY action is the M-step collect; the dict merge
-    # replicates the old left-join + coalesce (empty codes keep their
-    # centroid) exactly, and the Spark-side assignment / round(avg, 6)
-    # arithmetic is unchanged.
+    # codebook state lives driver-side between iterations (see
+    # ivf_build_index): each iteration's only action is the M-step collect
     init_rows = (
         sub.where(
             F.col("nid").isin(
@@ -661,78 +630,16 @@ def pq_train_codebooks(
     book = {
         (r["s"], id_rank[r["nid"]]): list(r["sv"]) for r in init_rows
     }
-
-    def _book_rows():
-        return [(s, code, cv) for (s, code), cv in sorted(book.items())]
-
     for _ in range(n_iters):
-        mats = [
-            np.asarray(
-                [cv for (s2, _), cv in sorted(book.items()) if s2 == s],
-                dtype=np.float64,
-            )
-            for s in range(m)
-        ]
-
-        # FUSED E+M step (r14, see _assign_mean_partials): the same
-        # Arrow pass that argmins each (s, subvector) batch also reduces
-        # it to per-(s, code, pos) partial sums — m·n_codes·subdim rows
-        # per batch instead of the sample·subdim posexplode through the
-        # shuffle. Assignment arithmetic is unchanged (same d² matmul,
-        # first-minimum argmin); the mean becomes round(Σ psum / Σ cnt,
-        # 6), the same double-accumulation class round-6 absorbs.
-        def _partials(it):
-            for pdf in it:
-                if len(pdf) == 0:
-                    continue
-                svs = np.vstack(pdf["sv"].to_numpy())
-                subd = svs.shape[1]
-                frames = []
-                for s in range(m):
-                    mask = (pdf["s"] == s).to_numpy()
-                    if not mask.any():
-                        continue
-                    v = svs[mask]
-                    cmat = mats[s]
-                    d2 = (
-                        (v * v).sum(axis=1)[:, None]
-                        - 2.0 * (v @ cmat.T)
-                        + (cmat * cmat).sum(axis=1)[None, :]
-                    )
-                    codes = np.argmin(d2, axis=1)  # first (lowest) code wins ties
-                    sums = np.zeros((cmat.shape[0], subd), dtype=np.float64)
-                    np.add.at(sums, codes, v)
-                    cnts = np.bincount(codes, minlength=cmat.shape[0])
-                    present = np.flatnonzero(cnts)
-                    frames.append(
-                        pd.DataFrame(
-                            {
-                                "s": np.full(len(present) * subd, s, dtype=np.int32),
-                                "code": np.repeat(present, subd),
-                                "pos": np.tile(
-                                    np.arange(subd, dtype=np.int32), len(present)
-                                ),
-                                "cnt": np.repeat(cnts[present], subd),
-                                "psum": sums[present].ravel(),
-                            }
-                        )
-                    )
-                if frames:
-                    yield pd.concat(frames, ignore_index=True)
-
-        partials = sub.mapInPandas(
-            _partials, "s int, code long, pos int, cnt long, psum double"
-        )
-        dims = partials.groupBy("s", "code", "pos").agg(
-            F.round(F.sum("psum") / F.sum("cnt"), 6).alias("m")
-        )
-        new_cv = _assemble_means(dims.collect(), key_len=2)
-        # empty codes keep their previous centroid (the old left join's
-        # coalesce)
-        book = {key: new_cv.get(key, cv) for key, cv in book.items()}
+        # each (s, subvector) row is assigned against subspace s's book
+        partials = _assign_mean_partials(sub, book, "sv", sub_col="s")
+        book = _lloyd_update(partials, ["s", "cid"], book)
     ckpt_release(sub)
     spark = corpus.sparkSession
-    return spark.createDataFrame(_book_rows(), "s int, code int, cv array<double>")
+    return spark.createDataFrame(
+        [(s, code, cv) for (s, code), cv in sorted(book.items())],
+        "s int, code int, cv array<double>",
+    )
 
 
 def pq_encode(

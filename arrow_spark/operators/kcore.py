@@ -36,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..checkpoint import ckpt_reset_stats
+from ..checkpoint import ckpt_reset_stats, iterate
 
 __all__ = ["undirected_edges", "k_core"]
 
@@ -68,12 +68,8 @@ def k_core(
     it like shortest_paths sizes its relaxation rounds (the fixpoint is
     reached once no vertex falls below k; extra rounds are no-ops but
     still cost a pass, so don't oversize it)."""
-    # Loop-carried edge frame: stats-reset checkpoint, not bare
-    # localCheckpoint — the per-round semi-joins would compound preserved
-    # origin-size estimates to BigInteger overflow at planning time (the
-    # CC-loop discovery, arrow_spark/checkpoint.py).
-    cur = ckpt_reset_stats(und)
-    for _ in range(rounds):
+
+    def _peel(cur: DataFrame) -> DataFrame:
         ends = cur.select(F.col("lo").alias("n")).unionAll(
             cur.select(F.col("hi").alias("n"))
         )
@@ -83,7 +79,7 @@ def k_core(
             .where(F.col("d") >= k)
             .select("n")
         )
-        nxt = (
+        return (
             cur.join(
                 F.broadcast(alive.withColumnRenamed("n", "lo")), "lo", "left_semi"
             )
@@ -91,7 +87,8 @@ def k_core(
                 F.broadcast(alive.withColumnRenamed("n", "hi")), "hi", "left_semi"
             )
         )
-        cur = ckpt_reset_stats(nxt, release=cur)
+
+    cur = iterate(ckpt_reset_stats(und), _peel, rounds)
     ends = cur.select(F.col("lo").alias("node")).unionAll(
         cur.select(F.col("hi").alias("node"))
     )

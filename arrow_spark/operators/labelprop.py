@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
-from ..checkpoint import ckpt_release, ckpt_reset_stats
+from ..checkpoint import ckpt_reset_stats, iterate
 
 __all__ = ["label_propagation"]
 
@@ -57,40 +57,31 @@ def label_propagation(
     # would be recomputed per round. Stats-reset so the corpus-scale
     # frame can never be elected a broadcast side.
     und = ckpt_reset_stats(und)
-    # Loop-carried state goes through ckpt_reset_stats, not bare
-    # localCheckpoint: each round joins labels back against the edge
-    # frame, so preserved origin-size estimates compound multiplicatively
-    # until BigInteger overflow at planning time (proven in the CC loop
-    # at gen-sf3 — see arrow_spark/checkpoint.py). Generation 0 is a
-    # plain projection over the (persisted) und checkpoint; round 1
-    # materializes it inside its own checkpoint action (r14 — one fewer
-    # eager entry action).
-    labels = (
-        und.select(F.col("u").alias("node"))
-        .distinct()
-        .select("node", F.col("node").alias("label"))
-    )
     pick = W.partitionBy("node").orderBy(
         F.col("s").desc(), F.col("label").asc()
     )
-    for _ in range(n_iters):
+
+    def _round(labels: DataFrame) -> DataFrame:
         votes = (
             und.join(labels, und["v"] == labels["node"])
             .select(F.col("u").alias("node"), "label", "w")
             .groupBy("node", "label")
             .agg(F.sum("w").alias("s"))
         )
-        # r14: the winner frame already covers EVERY node, so the old
-        # labels⋈winner left join + coalesce was dead weight (one
-        # shuffle join per round for an impossible miss): nodes are
-        # defined by edges, und is symmetrized, and every neighbor is
-        # itself a node — so every node receives at least one vote.
-        labels = ckpt_reset_stats(
+        # the winner frame covers EVERY node: nodes are defined by
+        # edges, und is symmetrized, and every neighbor is itself a
+        # node — so every node receives at least one vote
+        return (
             votes.withColumn("__rn__", F.row_number().over(pick))
             .where(F.col("__rn__") == 1)
-            .select("node", "label"),
-            release=labels,
+            .select("node", "label")
         )
-    # the returned frame reads only the final labels generation
-    ckpt_release(und)
-    return labels
+
+    # generation 0 is a projection over the persisted und checkpoint;
+    # round 1 materializes it inside its own checkpoint action
+    labels = (
+        und.select(F.col("u").alias("node"))
+        .distinct()
+        .select("node", F.col("node").alias("label"))
+    )
+    return iterate(labels, _round, n_iters, invariants=(und,))

@@ -25,10 +25,12 @@ fixpoint; every iteration's input is bit-identical on both engines.
 
 from __future__ import annotations
 
+import itertools
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..checkpoint import ckpt_release, ckpt_reset_stats
+from ..checkpoint import ckpt_reset_stats, iterate
 
 __all__ = ["pagerank", "transition_edges"]
 
@@ -78,44 +80,26 @@ def pagerank(
         F.col(dst).alias("dst"),
         (F.col(weight) if weight else F.lit(1)).cast("double").alias("w"),
     )
-    # Checkpoint the loop-invariant edge frame ONCE (the CC-loop `sym`
-    # pattern) WITH the out-weight invariant pre-folded in (r14): the
-    # r13 shape materialized a separate `outw` frame and re-joined it
-    # every round — one extra shuffle + join per iteration for values
-    # that never change. Carrying `ow` as an edge column keeps the
-    # per-row arithmetic (r * w / ow over identical w, ow values)
-    # byte-identical while the contribution step becomes a single
-    # edges⋈ranks join. Stats-reset (not bare) so the corpus-scale edge
+    # Checkpoint the loop-invariant edge frame ONCE with the out-weight
+    # pre-folded in as an `ow` column, so the contribution step is a
+    # single edges⋈ranks join. Stats-reset so the corpus-scale edge
     # frame can never be elected a broadcast side.
     outw = e.groupBy("src").agg(F.sum("w").alias("ow"))
     e = ckpt_reset_stats(e.join(outw, "src"))
-    # Node set with a has_out flag (r14): dangling mass was an
-    # anti-join of ranks against a separate source-set frame every
-    # round; the flag rides inside the loop-carried rank frame instead,
-    # so the round's dangling aggregate is a filtered sum over the
-    # already-persisted ranks — no join, no second frame.
+    # Node set with a has_out flag: the flag rides inside the
+    # loop-carried rank frame, so the round's dangling aggregate is a
+    # filtered sum over the persisted ranks — no join, no second frame.
     nodes = ckpt_reset_stats(
         e.select(F.col("src").alias("n"), F.lit(1).alias("has_out"))
         .union(e.select(F.col("dst").alias("n"), F.lit(0).alias("has_out")))
         .groupBy("n")
         .agg(F.max("has_out").alias("has_out"))
     )
-    # N as a driver-side literal (r14): the node count is loop-invariant
-    # scalar metadata; the old shape paid a crossJoin(broadcast(cnt))
-    # per round. 1.0/N, (1-d)/N and d/N below are the same IEEE double
-    # operations the old column divisions performed.
+    # N as a driver-side literal: the node count is loop-invariant
+    # scalar metadata
     n_nodes = nodes.count()
 
-    # Loop-carried state goes through ckpt_reset_stats, not bare
-    # localCheckpoint: the per-round plan joins ranks back into itself,
-    # so preserved origin-size estimates would compound multiplicatively
-    # until BigInteger overflow at planning time (proven in the CC loop
-    # at gen-sf3 round ~25 — see arrow_spark/checkpoint.py). Generation
-    # 0 is a plain projection over the `nodes` checkpoint — the first
-    # round materializes it inside its own checkpoint action.
-    ranks = nodes.select("n", "has_out", F.lit(1.0 / n_nodes).alias("r"))
-
-    for _ in range(max(1, n_iters)):
+    def _round(ranks: DataFrame) -> DataFrame:
         contrib = (
             e.join(ranks, e.src == ranks.n)
             .groupBy("dst")
@@ -125,7 +109,7 @@ def pagerank(
             ranks.where(F.col("has_out") == 0)
             .agg(F.coalesce(F.sum("r"), F.lit(0.0)).alias("d"))
         )
-        nxt = (
+        return (
             ranks.crossJoin(F.broadcast(dang))
             .join(contrib, ranks.n == contrib.dst, "left")
             .select(
@@ -141,10 +125,15 @@ def pagerank(
                 ).alias("r"),
             )
         )
-        ranks = ckpt_reset_stats(nxt, release=ranks)
-    # the returned frame reads only the final ranks generation
-    ckpt_release(e)
-    ckpt_release(nodes)
+
+    # generation 0 is a projection over the `nodes` checkpoint — round 1
+    # materializes it inside its own checkpoint action
+    ranks = iterate(
+        nodes.select("n", "has_out", F.lit(1.0 / n_nodes).alias("r")),
+        _round,
+        max(1, n_iters),
+        invariants=(e, nodes),
+    )
     return ranks.select(F.col("n").alias("node"), F.col("r").alias("rank"))
 
 
@@ -195,21 +184,10 @@ def personalized_pagerank(
             F.coalesce(F.col("__in_s__"), F.lit(0)).alias("in_s"),
         )
     )
-    # seed count as a driver-side literal (seed sets are query-sized);
-    # in_s/sc below is the same IEEE double division the old
-    # crossJoin(broadcast(scnt)) column form performed
+    # seed count as a driver-side literal (seed sets are query-sized)
     n_seeds = s.count()
 
-    # loop-carried → stats-reset checkpoint (see pagerank above);
-    # generation 0 is a projection over the nodes checkpoint
-    ranks = nodes.select(
-        "n",
-        "has_out",
-        "in_s",
-        (F.col("in_s").cast("double") / F.lit(float(n_seeds))).alias("r"),
-    )
-
-    for _ in range(max(1, n_iters)):
+    def _round(ranks: DataFrame) -> DataFrame:
         contrib = (
             e.join(ranks, e.src == ranks.n)
             .groupBy("dst")
@@ -219,7 +197,7 @@ def personalized_pagerank(
             ranks.where(F.col("has_out") == 0)
             .agg(F.coalesce(F.sum("r"), F.lit(0.0)).alias("d"))
         )
-        nxt = (
+        return (
             ranks.crossJoin(F.broadcast(dang))
             .join(contrib, ranks.n == contrib.dst, "left")
             .select(
@@ -238,9 +216,15 @@ def personalized_pagerank(
                 ).alias("r"),
             )
         )
-        ranks = ckpt_reset_stats(nxt, release=ranks)
-    ckpt_release(e)
-    ckpt_release(nodes)
+
+    # generation 0 is a projection over the nodes checkpoint
+    seed = F.col("in_s").cast("double") / F.lit(float(n_seeds))
+    ranks = iterate(
+        nodes.select("n", "has_out", "in_s", seed.alias("r")),
+        _round,
+        max(1, n_iters),
+        invariants=(e, nodes),
+    )
     return ranks.select(F.col("n").alias("node"), F.col("r").alias("rank"))
 
 
@@ -275,16 +259,7 @@ def hits(
         .union(e.select(F.col("dst").alias("n")))
         .distinct()
     )
-    # N as a driver-side literal (r14, see pagerank): 1.0/N is the same
-    # IEEE double division the old crossJoin(broadcast(cnt)) performed
     n_nodes = nodes.count()
-    # loop-carried → stats-reset checkpoint (see pagerank above);
-    # generation 0 is a projection over the nodes checkpoint
-    scores = nodes.select(
-        "n",
-        F.lit(1.0 / n_nodes).alias("a"),
-        F.lit(1.0 / n_nodes).alias("h"),
-    )
 
     def _norm(df: DataFrame, col: str) -> DataFrame:
         tot = df.agg(F.sum(col).alias("__t__"))
@@ -296,12 +271,10 @@ def hits(
             ).otherwise(F.lit(0.0)).alias(col),
         ).select("n", "a", "h")
 
-    for _ in range(max(1, n_iters)):
-        # r14: the loop-carried score frame IS the node universe (one
-        # row per node, invariant), so each half-step left-joins the new
-        # raw scores straight onto it — the r13 shape paid two joins per
-        # half-step (nodes⋈new, then ⋈scores to re-attach the other
-        # column).
+    # The loop-carried score frame IS the node universe (one row per
+    # node, invariant), so each half-step left-joins the new raw scores
+    # straight onto it. Each half-step is its own checkpointed round.
+    def _authority(scores: DataFrame) -> DataFrame:
         a_new = (
             e.join(scores, e.src == scores.n)
             .groupBy("dst")
@@ -315,7 +288,9 @@ def hits(
                 "h",
             )
         )
-        scores = ckpt_reset_stats(_norm(nxt, "a"), release=scores)
+        return _norm(nxt, "a")
+
+    def _hub(scores: DataFrame) -> DataFrame:
         h_new = (
             e.join(scores.select(F.col("n").alias("dn"), "a"), e.dst == F.col("dn"))
             .groupBy("src")
@@ -329,9 +304,20 @@ def hits(
                 F.coalesce(F.col("h_raw"), F.lit(0.0)).alias("h"),
             )
         )
-        scores = ckpt_reset_stats(_norm(nxt, "h"), release=scores)
-    ckpt_release(e)
-    ckpt_release(nodes)
+        return _norm(nxt, "h")
+
+    half_steps = itertools.cycle((_authority, _hub))
+    # generation 0 is a projection over the nodes checkpoint
+    scores = iterate(
+        nodes.select(
+            "n",
+            F.lit(1.0 / n_nodes).alias("a"),
+            F.lit(1.0 / n_nodes).alias("h"),
+        ),
+        lambda scores: next(half_steps)(scores),
+        2 * max(1, n_iters),
+        invariants=(e, nodes),
+    )
     return scores.select(
         F.col("n").alias("node"),
         F.col("a").alias("authority"),

@@ -54,7 +54,11 @@ def salted_join(
     The (large, skewed) left side gets a random salt in [0, n); the
     right side is replicated once per salt value (explode of a literal
     range — n× the small side, 1× the big side). The join key becomes
-    (key, salt), so a hot key's rows spread over n reducers.
+    (key, salt), and both sides are hash-partitioned on it into at least
+    n partitions, so a hot key's rows spread over n reducers even when
+    ``spark.sql.shuffle.partitions`` (the core count by default) is
+    smaller than n. The join is a shuffled hash join building the
+    replicated right side: a broadcast would bypass those reducers.
 
     AQE's skew-join split handles moderate skew automatically; salting
     is for the pathological single-key case where one key exceeds an
@@ -63,10 +67,12 @@ def salted_join(
     """
     if how not in ("inner", "left"):
         raise ValueError("salted_join supports inner/left joins")
+    spark = left.sparkSession
+    n_parts = max(salt_buckets, int(spark.conf.get("spark.sql.shuffle.partitions")))
     salt = (F.rand(seed) * salt_buckets).cast("int")
-    lft = left.withColumn("__salt__", salt)
+    lft = left.withColumn("__salt__", salt).repartition(n_parts, on, "__salt__")
     rgt = right.withColumn(
         "__salt__", F.explode(F.array(*[F.lit(i) for i in range(salt_buckets)]))
-    )
-    out = lft.join(rgt, [on, "__salt__"], how)
+    ).repartition(n_parts, on, "__salt__")
+    out = lft.join(rgt.hint("shuffle_hash"), [on, "__salt__"], how)
     return out.drop("__salt__")

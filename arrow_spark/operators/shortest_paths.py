@@ -38,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..checkpoint import ckpt_release, ckpt_reset_stats
+from ..checkpoint import ckpt_reset_stats, iterate
 
 __all__ = ["shortest_paths"]
 
@@ -71,27 +71,17 @@ def shortest_paths(
     # unmaterialized edge lineage would be recomputed per round.
     # Stats-reset so the corpus-scale frame is never broadcast-elected.
     e = ckpt_reset_stats(e)
-    # Loop-carried state goes through ckpt_reset_stats, not bare
-    # localCheckpoint: each relaxation round joins dist against the edge
-    # frame, so preserved origin-size estimates compound multiplicatively
-    # until BigInteger overflow at planning time (proven in the CC loop
-    # at gen-sf3 — see arrow_spark/checkpoint.py).
+
+    def _relax(dist: DataFrame) -> DataFrame:
+        relaxed = (
+            dist.join(e, dist["node"] == e["u"])
+            .select(F.col("v").alias("node"), (F.col("dist") + F.col("w")).alias("dist"))
+        )
+        return dist.unionByName(relaxed).groupBy("node").agg(F.min("dist").alias("dist"))
+
     dist = ckpt_reset_stats(
         sources.select(F.col("node").cast("long").alias("node"))
         .distinct()
         .select("node", F.lit(0).cast("long").alias("dist"))
     )
-    for _ in range(n_iters):
-        relaxed = (
-            dist.join(e, dist["node"] == e["u"])
-            .select(F.col("v").alias("node"), (F.col("dist") + F.col("w")).alias("dist"))
-        )
-        dist = ckpt_reset_stats(
-            dist.unionByName(relaxed)
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist")),
-            release=dist,
-        )
-    # the returned frame reads only the final dist generation
-    ckpt_release(e)
-    return dist
+    return iterate(dist, _relax, n_iters, invariants=(e,))

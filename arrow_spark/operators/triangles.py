@@ -86,14 +86,9 @@ def count_triangles(
     # upstream derivation per reference — measured 90 duplicated scans /
     # 184 exchanges in the static plan of the registry query before this
     # (plan-fingerprint audit); after, each leg scans the checkpoint.
-    # Stats-reset checkpoint (r13): not loop-carried here, but the frame
-    # re-enters THREE joins in one plan (both wedge legs + closers), so a
-    # preserved origin estimate (itself a 3-way join product) gets cubed;
-    # and callers may legally invoke count_triangles inside their own
-    # loops (k-truss-style peeling drivers), where the compounding chain
-    # from arrow_spark/checkpoint.py applies verbatim. Resetting stats
-    # also guarantees the planner never elects an edge frame as a
-    # broadcast build side — the only safe default at 100 TB.
+    # Stats-reset because the frame re-enters three joins in one plan
+    # and callers may run this inside their own loops (see
+    # arrow_spark/checkpoint.py).
     o = ckpt_reset_stats(orient_edges(edges, src, dst))
     w1 = o.select(F.col("lo").alias("u"), F.col("hi").alias("v"))
     w2 = o.select(F.col("lo").alias("u"), F.col("hi").alias("w"))

@@ -878,18 +878,9 @@ def dedup_semantic_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     with k ∝ corpus size the per-cluster population stays bounded, and
     clusters above a size cap would be re-clustered recursively (the
     SemDeDup paper's sharding); kept here at bench-verifiable k."""
-    from arrow_spark.queries.similarity import pinned_lloyd
+    from arrow_spark.queries.similarity import milli_embeddings, pinned_lloyd
 
-    emb = (
-        table(spark, sf_dir, "embeddings")
-        .select(
-            "vec_id",
-            F.transform(
-                "embedding", lambda x: F.round(x.cast("double") * 1000).cast("long")
-            ).alias("e"),
-        )
-        .localCheckpoint()
-    )
+    emb = milli_embeddings(spark, sf_dir)
     assign, _ = pinned_lloyd(emb, k=16, iters=2)
     a = assign.select(
         F.col("vec_id").alias("ida"), F.col("cid"), F.col("e").alias("ea")

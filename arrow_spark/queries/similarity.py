@@ -281,6 +281,18 @@ def _fold_sq_dist(vec_col, centroid_vals):
     )
 
 
+def milli_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The embeddings fixture snapped to integer milli-units,
+    ``(vec_id, e)`` with e = round(x·1000) as BIGINT, localCheckpointed
+    once — the shared input of every hash-exact ANN replay."""
+    return table(spark, sf_dir, "embeddings").select(
+        "vec_id",
+        F.transform(
+            "embedding", lambda x: F.round(x.cast("double") * 1000).cast("long")
+        ).alias("e"),
+    ).localCheckpoint()
+
+
 def pinned_lloyd(emb, k: int, iters: int):
     """(assign, cents) after ``iters`` pinned Lloyd passes over
     milli-int embeddings (vec_id, e): first-k-by-id init, exact-integer
@@ -338,12 +350,7 @@ def similarity_ivf_exact_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     three query vectors — hash-identical to the DuckDB unrolled replay.
     Driver holds only the k×64 centroids per iteration (the Lloyd
     scalar-collect precedent)."""
-    emb = table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.transform(
-            "embedding", lambda x: F.round(x.cast("double") * 1000).cast("long")
-        ).alias("e"),
-    ).localCheckpoint()
+    emb = milli_embeddings(spark, sf_dir)
     assign, cents = pinned_lloyd(emb, _IVF_K, _IVF_ITERS)
     probe = emb.where(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("qid"), F.col("e").alias("qe")
@@ -492,59 +499,15 @@ def similarity_pq_exact_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     ANN family (brute force, LSH, IVF, now PQ)."""
     from pyspark.sql import Window as W
 
-    emb = table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.transform("embedding", lambda x: F.round(x.cast("double") * 1000).cast("long")).alias("e"),
-    ).localCheckpoint()
-
-    def sub(col, s):
-        return F.slice(col, s * _PQ_DSUB + 1, _PQ_DSUB)
-
-    # per-subspace Lloyd with driver-held centroids (IVF-replay pattern)
+    emb = milli_embeddings(spark, sf_dir)
+    # per-subspace pinned Lloyd (the IVF-replay loop on each slice)
     books: list[dict[int, list[float]]] = []
     code_cols = []
     for s in range(_PQ_M):
-        sv = emb.select("vec_id", sub(F.col("e"), s).alias("v"))
-        cents = {
-            r["vec_id"]: [float(x) for x in r["v"]]
-            for r in sv.where(F.col("vec_id") < _PQ_K).collect()
-        }
-        assign = None
-        for _ in range(_PQ_ITERS):
-            dists = F.array(
-                *[
-                    F.struct(
-                        _fold_sq_dist(F.col("v"), cents[code]).alias("dist"),
-                        F.lit(code).alias("code"),
-                    )
-                    for code in sorted(cents)
-                ]
-            )
-            assign = sv.withColumn("code", F.array_min(dists)["code"])
-            sums = (
-                assign.select("code", F.posexplode("v").alias("pos", "val"))
-                .groupBy("code", "pos")
-                .agg(F.sum("val").alias("sm"), F.count(F.lit(1)).alias("n"))
-                .groupBy("code")
-                .agg(
-                    F.transform(
-                        F.array_sort(
-                            F.collect_list(
-                                F.struct(
-                                    "pos",
-                                    (F.col("sm").cast("double") / F.col("n").cast("double")).alias("m"),
-                                )
-                            )
-                        ),
-                        lambda st: st["m"],
-                    ).alias("c")
-                )
-                .collect()
-            )
-            new_c = {r["code"]: list(r["c"]) for r in sums}
-            cents = {code: new_c.get(code, c) for code, c in cents.items()}
+        sv = emb.select("vec_id", F.slice("e", s * _PQ_DSUB + 1, _PQ_DSUB).alias("e"))
+        assign, cents = pinned_lloyd(sv, _PQ_K, _PQ_ITERS)
         books.append(cents)
-        code_cols.append(assign.select("vec_id", F.col("code").alias(f"code{s}")))
+        code_cols.append(assign.select("vec_id", F.col("cid").alias(f"code{s}")))
 
     codes = emb.select("vec_id")
     for s in range(_PQ_M):
@@ -649,16 +612,7 @@ def similarity_eval_ann_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     from arrow_spark.queries.base import REGISTRY
 
     ivf = REGISTRY["similarity_ivf_exact_replay"].fn(spark, sf_dir)
-    emb = (
-        table(spark, sf_dir, "embeddings")
-        .select(
-            "vec_id",
-            F.transform(
-                "embedding", lambda x: F.round(x.cast("double") * 1000).cast("long")
-            ).alias("e"),
-        )
-        .localCheckpoint()
-    )
+    emb = milli_embeddings(spark, sf_dir)
     probe = emb.where(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("qid"), F.col("e").alias("qe")
     )

@@ -1,5 +1,6 @@
-"""Regression tests for arrow_spark.checkpoint.ckpt_reset_stats — the
-stats-reset checkpoint every iterative join loop must use.
+"""Regression tests for arrow_spark.checkpoint: ``ckpt_reset_stats``, the
+stats-reset checkpoint every iterative join loop must use, and
+``iterate``, the loop primitive that owns checkpoint and release.
 
 Background (r12 second-decade sweep): bare ``localCheckpoint`` preserves
 the origin plan's size estimate, and a loop whose round joins the
@@ -168,17 +169,111 @@ def test_generations_persist_serialized(spark):
     ckpt_release(g)
 
 
-def test_loop_holds_one_generation(spark):
-    """The documented loop shape must hold exactly one persisted
-    generation regardless of round count."""
-    from arrow_spark.checkpoint import ckpt_release
+def _persistent_ids(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
-    base = _n_persistent(spark)
-    state = ckpt_reset_stats(
-        spark.range(200).select(F.col("id").alias("v"), F.lit(1).cast("long").alias("x"))
-    )
+
+def _new_persistent(spark, before: set) -> int:
+    """Persisted RDDs created since ``before`` and still live. Counting
+    new ids rather than the total keeps these checks immune to Spark's
+    ContextCleaner freeing earlier tests' frames at driver-GC time."""
+    return len(_persistent_ids(spark) - before)
+
+
+def test_loop_holds_one_generation(spark):
+    """The loop shape must hold exactly one persisted generation
+    regardless of round count — hand-rolled with ``release=`` and
+    driven by ``iterate``, which also releases its invariants on exit
+    and leaves only the returned generation live."""
+    from arrow_spark.checkpoint import ckpt_release, iterate
+
+    before = _persistent_ids(spark)
+    seed = spark.range(200).select(F.col("id").alias("v"), F.lit(1).cast("long").alias("x"))
+    state = ckpt_reset_stats(seed)
     for _ in range(6):
         state = ckpt_reset_stats(_self_join_round(state), release=state)
-        assert _n_persistent(spark) == base + 1
+        assert _new_persistent(spark, before) == 1
     ckpt_release(state)
-    assert _n_persistent(spark) == base
+    assert _new_persistent(spark, before) == 0
+
+    inv = ckpt_reset_stats(spark.range(3).select(F.col("id").alias("v")))
+    seen = []
+
+    def step(df):
+        seen.append(_new_persistent(spark, before))
+        return _self_join_round(df)
+
+    state = iterate(ckpt_reset_stats(seed), step, 6, invariants=(inv,))
+    # every round starts from the invariant + exactly one generation
+    assert seen == [2] * 6
+    assert _new_persistent(spark, before) == 1
+    assert inv._ckpt_src is None
+    assert state.agg(F.sum("x")).collect()[0][0] == 200 * 2**6
+    ckpt_release(state)
+    assert _new_persistent(spark, before) == 0
+
+
+def test_iterate_releases_everything_when_a_round_raises(spark):
+    """A step that raises in round 3 must leave no persisted RDD behind:
+    the live generation and the invariants are released on the error
+    path, and the step's exception propagates unchanged."""
+    from arrow_spark.checkpoint import iterate
+
+    before = _persistent_ids(spark)
+    inv = ckpt_reset_stats(spark.range(3).select(F.col("id").alias("v")))
+    calls = []
+
+    def step(df):
+        calls.append(1)
+        if len(calls) == 3:
+            raise ValueError("step failed in round 3")
+        return _self_join_round(df)
+
+    state = ckpt_reset_stats(
+        spark.range(50).select(F.col("id").alias("v"), F.lit(1).cast("long").alias("x"))
+    )
+    with pytest.raises(ValueError, match="round 3"):
+        iterate(state, step, 6, invariants=(inv,))
+    assert len(calls) == 3
+    assert _new_persistent(spark, before) == 0
+
+
+def test_iterate_fixpoint_cap_raises_and_leaks_nothing(spark):
+    """Fixpoint mode on a step that never converges (every round shifts
+    every row, so counts agree but the sets differ) must raise a
+    RuntimeError naming the round cap, with nothing left persisted."""
+    from arrow_spark.checkpoint import iterate
+
+    before = _persistent_ids(spark)
+    inv = ckpt_reset_stats(spark.range(3).select(F.col("id").alias("v")))
+    init = spark.range(20).select(F.col("id").alias("v"))
+    with pytest.raises(RuntimeError, match="round cap of 4"):
+        iterate(
+            init,
+            lambda df: df.select((F.col("v") + 1).alias("v")),
+            4,
+            invariants=(inv,),
+            fixpoint=("v",),
+        )
+    assert _new_persistent(spark, before) == 0
+
+
+def test_iterate_fixpoint_stops_at_first_repeat(spark):
+    """Fixpoint mode returns the first generation equal (as a set) to
+    its predecessor and keeps only that one persisted."""
+    from arrow_spark.checkpoint import ckpt_release, iterate
+
+    before = _persistent_ids(spark)
+    calls = []
+
+    def step(df):
+        calls.append(1)
+        return df.select(F.least(F.col("v") + 1, F.lit(3)).alias("v")).distinct()
+
+    out = iterate(spark.range(1).select(F.col("id").alias("v")), step, 10, fixpoint=("v",))
+    # 0 → 1 → 2 → 3 → 3: the fourth round repeats the third
+    assert len(calls) == 4
+    assert [r["v"] for r in out.collect()] == [3]
+    assert _new_persistent(spark, before) == 1
+    ckpt_release(out)
+    assert _new_persistent(spark, before) == 0

@@ -40,15 +40,16 @@ ALLOWED: dict[tuple[str, str], tuple[int, str]] = {
     ("llm/tokenize.py", "read_bpe_vocab"): (1, "persisted vocab table — vocab_size-bounded by the training contract"),
     ("llm/similarity.py", "quantization_params"): (1, "one (min,max) row per embedding DIMENSION — dim-bounded codebook metadata"),
     ("llm/similarity.py", "_nearest_centroids"): (1, "k centroid vectors — index metadata re-entered as literals"),
-    ("llm/similarity.py", "ivf_build_index"): (2, "limit(n_clusters) seed vectors + per-iteration (cid, pos) means — both k·dim index metadata (r14 driver-side Lloyd state)"),
-    ("llm/similarity.py", "pq_train_codebooks"): (3, "limit(n_codes) seed ids + their m subvectors + per-iteration (s, code, pos) means — all m·n_codes·subdim codebook metadata (r14 driver-side Lloyd state)"),
+    ("llm/similarity.py", "ivf_build_index"): (1, "limit(n_clusters) seed vectors — k·dim index metadata"),
+    ("llm/similarity.py", "pq_train_codebooks"): (2, "limit(n_codes) seed ids + their m subvectors — m·n_codes·subdim codebook metadata"),
+    ("llm/similarity.py", "_lloyd_update"): (1, "per-iteration (key..., pos) means — k·dim (IVF) or m·n_codes·subdim (PQ) driver-side Lloyd state"),
     ("llm/similarity.py", "_collect_codebooks"): (1, "n_subspaces x n_codes codebook vectors — index metadata"),
     ("sources/flight_sql.py", "do_put"): (2, "DML execution trigger (ExecuteUpdate): Spark SQL command frames are empty/row-count-sized — collect() is the action, not a data pull"),
     ("sources/bloom_index.py", "point_lookup"): (1, "bloom-admitted (file, row_group) candidates — file-METADATA-scale, the pruning index's output"),
     ("testing/oracle.py", "run_compare"): (1, "test harness by design — sf-bounded oracle comparison"),
     ("queries/extras.py", "parquet_bloom_point_lookup"): (1, "1-row min() aggregate — the probe key"),
     ("queries/similarity.py", "pinned_lloyd"): (2, "k query vectors + k centroids — the pinned-iteration replay twin's index metadata"),
-    ("queries/similarity.py", "similarity_pq_exact_replay"): (3, "k probe vectors + PQ codebooks — replay-twin metadata, k- and codebook-bounded"),
+    ("queries/similarity.py", "similarity_pq_exact_replay"): (1, "3 probe vectors — replay-twin metadata (codebooks come from pinned_lloyd)"),
 }
 
 

@@ -185,6 +185,24 @@ def test_connected_components_scrambled_id_chain(spark):
     assert {r.component for r in out} == {min(ids)}
 
 
+def test_connected_components_round_cap_raises_and_leaks_nothing(spark):
+    # A 50-vertex chain needs several star-contraction rounds; with a
+    # cap of one round the loop must fail loudly, and the edge
+    # checkpoint plus every loop generation must be released first.
+    from arrow_spark.llm.dedup import connected_components
+
+    jsc = spark.sparkContext._jsc
+    # new ids, not the total: the ContextCleaner may free earlier tests'
+    # frames at any driver GC
+    before = set(jsc.getPersistentRDDs().keySet())
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(49)], "id_a long, id_b long"
+    )
+    with pytest.raises(RuntimeError, match="round cap of 1"):
+        connected_components(edges, max_iter=1)
+    assert set(jsc.getPersistentRDDs().keySet()) <= before
+
+
 def test_connected_components_matches_union_find(spark):
     # Property test vs a driver-side union-find ground truth on a
     # deterministic pseudo-random multigraph with self-loops, stars,
